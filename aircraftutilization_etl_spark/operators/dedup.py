@@ -477,22 +477,6 @@ def duplicate_clusters(
     )
 
 
-def simhash_expr(text_col: str = "text", bits: int = 16):
-    """SimHash fingerprint as a ``bits``-character bit string.
-
-    Each word hashes to md5; hex digit p (one per output bit) votes
-    +1/−1 by its high bit (digit ≥ 8). Bit p of the fingerprint is 1
-    when the vote sum is positive.
-
-    NOTE: prefer ``with_simhash`` — this single-expression form embeds
-    the word-hash array in every per-bit fold, so the md5s are
-    re-evaluated ``bits`` times.
-    """
-    words = words_expr(text_col)
-    hashed = F.transform(words, lambda w: F.md5(w))
-    return _simhash_bits(hashed, bits)
-
-
 def _simhash_bits(hashed, bits: int):
     def bit(p: int):
         # vote_p = Σ_words (digit_p >= '8' ? 1 : -1)

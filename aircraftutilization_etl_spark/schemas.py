@@ -16,6 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
+    ArrayType,
     BooleanType,
     DoubleType,
     IntegerType,
@@ -43,7 +44,7 @@ STATES_SCHEMA = StructType(
         StructField("velocity", DoubleType()),
         StructField("true_track", DoubleType()),
         StructField("vertical_rate", DoubleType()),
-        StructField("sensors", StringType()),
+        StructField("sensors", ArrayType(IntegerType())),
         StructField("geo_altitude", DoubleType()),
         StructField("squawk", StringType()),
         StructField("spi", BooleanType()),

@@ -20,6 +20,9 @@ Modes (option-selected):
   basic auth + 5 s timeout; each micro-batch is one poll. Requires the
   ``requests`` package; import-gated like the client.
 
+Both readers return the record batches of ``rest.states_table``, the S2
+normalizer the batch cycle uses, so every path types and refuses alike.
+
 The feed snapshot is one ~10^4-row payload, so a single input partition
 is the honest physical shape (the parallelism story for the pipeline is
 in the downstream stateful processing, not the poll).
@@ -31,6 +34,7 @@ import json
 import os
 from collections.abc import Iterator
 
+import pyarrow as pa
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
@@ -39,39 +43,18 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-from ..errors import InvalidResponseError
 from ..schemas import STATES_SCHEMA
-
-N_STATE_COLUMNS = len(STATES_SCHEMA.fields)
-
-
-def _payload_rows(payload: dict) -> list[tuple]:
-    """S2 shape validation: the ``states`` array → typed tuples
-    (reference opensky/transformers.py:40-47)."""
-    try:
-        states = payload["states"]
-    except (KeyError, TypeError) as exc:
-        raise InvalidResponseError(str(exc)) from exc
-    rows = []
-    for vector in states or []:
-        if len(vector) != N_STATE_COLUMNS:
-            raise InvalidResponseError(
-                f"state vector arity {len(vector)} != {N_STATE_COLUMNS}"
-            )
-        rows.append(tuple(vector))
-    return rows
+from .rest import OpenSkyClient, states_table
 
 
-def _load_payload_file(path: str) -> list[tuple]:
+def _load_payload_file(path: str) -> list[pa.RecordBatch]:
     with open(path, encoding="utf-8") as f:
-        return _payload_rows(json.load(f))
+        return states_table(json.load(f)).to_batches()
 
 
-def _poll_live(options: dict) -> list[tuple]:
-    from .rest import OpenSkyClient
-
+def _poll_live(options: dict) -> list[pa.RecordBatch]:
     client = OpenSkyClient(options.get("username"), options.get("password"))
-    return _payload_rows(client.get_states())
+    return states_table(client.get_states()).to_batches()
 
 
 class OpenSkyBatchReader(DataSourceReader):
@@ -81,7 +64,7 @@ class OpenSkyBatchReader(DataSourceReader):
     def partitions(self):
         return [InputPartition(0)]
 
-    def read(self, partition: InputPartition) -> Iterator[tuple]:
+    def read(self, partition: InputPartition) -> Iterator[pa.RecordBatch]:
         path = self.options.get("payload_path")
         if path:
             return iter(_load_payload_file(path))
@@ -107,7 +90,7 @@ class OpenSkyStreamReader(SimpleDataSourceStreamReader):
         names = [n for n in os.listdir(self.payload_dir) if n.endswith(".json")]
         return [os.path.join(self.payload_dir, n) for n in sorted(names)]
 
-    def read(self, start: dict) -> tuple[Iterator[tuple], dict]:
+    def read(self, start: dict) -> tuple[Iterator[pa.RecordBatch], dict]:
         index = start.get("index", 0)
         if self.payload_dir:
             files = self._files()
@@ -116,15 +99,12 @@ class OpenSkyStreamReader(SimpleDataSourceStreamReader):
             return iter(_load_payload_file(files[index])), {"index": index + 1}
         return iter(_poll_live(self.options)), {"index": index + 1}
 
-    def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[tuple]:
+    def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[pa.RecordBatch]:
         # replay for recovery: deterministic in fixture mode
         if not self.payload_dir:
             return iter([])
-        files = self._files()
-        rows: list[tuple] = []
-        for i in range(start.get("index", 0), min(end.get("index", 0), len(files))):
-            rows.extend(_load_payload_file(files[i]))
-        return iter(rows)
+        files = self._files()[start.get("index", 0) : end.get("index", 0)]
+        return iter([batch for path in files for batch in _load_payload_file(path)])
 
 
 class OpenSkyDataSource(DataSource):

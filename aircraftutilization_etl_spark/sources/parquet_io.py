@@ -16,7 +16,6 @@ reference S8 is boto3 session wiring we deliberately do not port).
 from __future__ import annotations
 
 import json
-import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -243,11 +242,6 @@ class StateStore:
         stats.sort(reverse=True)
         for _, name in stats[max(keep - 1, 0):]:
             fs.delete(self._fs_and_path(f"{self.root}/{name}")[1], True)
-
-
-def local_path(path: str) -> str:
-    """Normalize a filesystem path for local testing."""
-    return path if "://" in path else f"file://{os.path.abspath(path)}"
 
 
 def compact_parquet(

@@ -8,18 +8,19 @@ table, KeyError/ValueError → InvalidResponseError. Reference S3
 (client.py:37-41): the ~500k-row aircraft-database CSV.
 
 Spark has no native REST source; the poll is driver-side (the payload is
-one ~10⁴-row snapshot — not a distributable read) and becomes a DataFrame
-via createDataFrame with the explicit schema. The streaming path wraps the
-same poll in a rate-limited generator feeding the micro-batch pipeline.
-``requests`` is import-gated: the engine works without it (tests inject
-responses).
+one ~10⁴-row snapshot — not a distributable read). :func:`states_table`
+is the one S2 normalizer: the batch cycle and the ``format("opensky")``
+readers both take its Arrow table. ``requests`` is import-gated: the
+engine works without it (tests inject responses).
 """
 
 from __future__ import annotations
 
 import logging
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..errors import InvalidCredentials, InvalidResponseError
 from ..schemas import STATES_SCHEMA
@@ -36,6 +37,9 @@ OPENSKY_AIRCRAFT_DB_URL = (
     "https://opensky-network.org/datasets/metadata/aircraftDatabase.csv"
 )
 REQUEST_TIMEOUT_SECONDS = 5  # reference client.py:25
+
+# the Arrow form of STATES_SCHEMA: what states_table returns
+STATES_ARROW_SCHEMA = to_arrow_schema(STATES_SCHEMA)
 
 
 class OpenSkyClient:
@@ -59,26 +63,55 @@ class OpenSkyClient:
         return response.json()
 
 
-def states_response_to_df(spark: SparkSession, payload: dict) -> DataFrame:
-    """S2 — JSON→table normalization with shape validation.
+def states_table(payload: dict) -> pa.Table:
+    """S2 — the ``states`` array of a /api/states/all payload as a table
+    with the Arrow form of STATES_SCHEMA.
 
-    The 17-element state vectors become typed rows; a missing ``states``
-    key or wrong-arity rows raise InvalidResponseError (reference
-    opensky/transformers.py:40-47).
+    A payload without ``states``, or a vector whose arity is not 17,
+    raises InvalidResponseError (reference opensky/transformers.py:40-47).
+    JSON does not tell ``0`` from ``0.0``, so numbers take their field's
+    type: an int in a double field becomes a double, an integral float in
+    an int field an int. A value its field cannot hold raises
+    InvalidResponseError too: a string or a bool in a numeric field, a
+    fraction in an int field (the reference's nullable Int32 cast refuses
+    it as well), a non-string in a string field.
     """
+    n_cols = len(STATES_ARROW_SCHEMA)
     try:
-        states = payload["states"]
+        states = payload["states"] or []
+        arities = [len(v) for v in states if len(v) != n_cols]
     except (KeyError, TypeError) as exc:
-        raise InvalidResponseError(str(exc)) from exc
-    n_cols = len(STATES_SCHEMA.fields)
-    rows = []
-    for vector in states or []:
-        if len(vector) != n_cols:
-            raise InvalidResponseError(
-                f"state vector arity {len(vector)} != {n_cols}"
-            )
-        rows.append(tuple(vector))
-    return spark.createDataFrame(rows, STATES_SCHEMA)
+        raise InvalidResponseError(f"malformed states: {exc!r}") from exc
+    if arities:
+        raise InvalidResponseError(f"state vector arity {arities[0]} != {n_cols}")
+    columns = zip(*states) if states else [()] * n_cols
+    arrays = [_column(f, v) for f, v in zip(STATES_ARROW_SCHEMA, columns)]
+    return pa.Table.from_arrays(arrays, schema=STATES_ARROW_SCHEMA)
+
+
+def _column(field: pa.Field, values) -> pa.Array:
+    """One field's values as its Arrow type. pyarrow would read a bool as
+    a number and truncate a fraction to an int; S2 refuses both."""
+    kind, flat = field.type, values
+    if pa.types.is_list(kind):
+        kind = kind.value_type
+        flat = [x for v in values if isinstance(v, (list, tuple)) for x in v]
+    integral = pa.types.is_integer(kind)
+    if integral or pa.types.is_floating(kind):
+        for v in flat:
+            if isinstance(v, bool) or (
+                integral and isinstance(v, float) and not v.is_integer()
+            ):
+                raise InvalidResponseError(f"{field.name}: {v!r} is not {kind}")
+    try:
+        return pa.array(values, type=field.type)
+    except (pa.ArrowException, TypeError, ValueError, OverflowError) as exc:
+        raise InvalidResponseError(f"{field.name}: {exc}") from exc
+
+
+def states_response_to_df(spark: SparkSession, payload: dict) -> DataFrame:
+    """S2 for the batch cycle: :func:`states_table` as a DataFrame."""
+    return spark.createDataFrame(states_table(payload), STATES_SCHEMA)
 
 
 def read_aircraft_database_csv(spark: SparkSession, path: str) -> DataFrame:

@@ -27,15 +27,11 @@ logger = logging.getLogger(__name__)
 
 RETENTION_DAYS = 365  # reference db.py:43,52 (expireAfterSeconds = 365 d)
 PARTITION_COLUMN = "landed_date"
+# the replay guard's key: metaField and timeField of the reference sink
+SINK_KEY = ["icao24", "landed_at"]
 
 
-def append_facts(
-    df: DataFrame,
-    path: str,
-    time_field: str = "landed_at",
-    batch_id: str | None = None,
-    dedupe: bool = True,
-) -> bool:
+def append_facts(df: DataFrame, path: str, batch_id: str | None = None) -> bool:
     """Exactly-once append of completed-flight facts, partitioned by
     landing date.
 
@@ -45,7 +41,7 @@ def append_facts(
     Exactly-once: a crash between the fact append and the state-manifest
     flip re-runs the batch against the old state generation, re-deriving
     the same completed flights. Before writing, the batch is anti-joined
-    on the sink key (icao24, ``time_field``) against the rows already in
+    on the sink key (icao24, landed_at) against the rows already in
     its own target date partitions, so replays append nothing. The guard
     scan is partition-pruned to the touched dates (a landing batch
     touches ~today) and column-pruned to the two key columns — O(recent
@@ -66,19 +62,19 @@ def append_facts(
     if df.isEmpty():
         logger.warning("Empty complete flights dataframe")
         return False
-    out = df.withColumn(PARTITION_COLUMN, F.to_date(F.col(time_field)))
+    out = df.withColumn(PARTITION_COLUMN, F.to_date(F.col("landed_at")))
     if batch_id is not None:
         out = out.withColumn("batch_id", F.lit(batch_id))
-    if dedupe and _path_exists(df.sparkSession, path):
+    if _path_exists(df.sparkSession, path):
         touched = [
             r[0] for r in out.select(PARTITION_COLUMN).distinct().collect()
         ]
         existing = (
             df.sparkSession.read.parquet(path)
             .filter(F.col(PARTITION_COLUMN).isin(touched))
-            .select("icao24", time_field)
+            .select(*SINK_KEY)
         )
-        out = out.join(existing, on=["icao24", time_field], how="left_anti")
+        out = out.join(existing, on=SINK_KEY, how="left_anti")
         if out.isEmpty():
             logger.warning("All facts already present (replayed batch)")
             return False

@@ -5,14 +5,12 @@ A stateful availableNow query with pending ProcessingTimeTimeout state
 until the TTL fires, so it never self-terminates at test scale —
 awaitTermination silently times out and processAllAvailable blocks just
 as long. Tests therefore poll the committed sink for the expected row
-count. This helper is the single copy of that protocol (it used to be
-duplicated between the three-backend equivalence test and the TWS
-test), and it closes the early-stop blind spot: after the expected
-rows appear it keeps the query alive for a bounded grace window (two
-further micro-batches, or a time cap — the no-data batches the pending
-timers keep scheduling advance batchId quickly) so a backend that
-over-emits in a later batch commits the extra rows where the caller's
-equality assert can see them.
+count. This helper is the single copy of that protocol, and it closes
+the early-stop blind spot: after the expected rows appear it keeps the
+query alive for a bounded grace window (two further micro-batches, or a
+time cap — the no-data batches the pending timers keep scheduling
+advance batchId quickly) so a kernel that over-emits in a later batch
+commits the extra rows where the caller's equality assert can see them.
 """
 
 from __future__ import annotations

@@ -9,10 +9,12 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
+from aircraftutilization_etl_spark.errors import InvalidResponseError
 from aircraftutilization_etl_spark.schemas import STATES_SCHEMA
 from aircraftutilization_etl_spark.sources.opensky_datasource import (
     OpenSkyDataSource,
 )
+from aircraftutilization_etl_spark.sources.rest import states_response_to_df
 from aircraftutilization_etl_spark.streaming import completed_flights_stream
 
 T0 = 1712338215
@@ -47,6 +49,73 @@ def test_batch_read_rejects_malformed_vector(registered, tmp_path):
     df = registered.read.format("opensky").option("payload_path", str(p)).load()
     with pytest.raises(Exception, match="arity"):
         df.collect()
+
+
+# One payload holding every S2 coercion: integers in double fields, an
+# integral float in each int field, int and integral-float sensors, and
+# nulls in every field but the key.
+COERCION_PAYLOAD = {
+    "time": T0,
+    "states": [
+        ["a1", "CS", "US", T0, T0, 21, 48, 1000, False,
+         0, 90, 0, [1, 2], 900, "7700", False, 0],
+        ["b2", "CS", "US", float(T0), float(T0), 21.5, 48.25, 1000.5, True,
+         5.5, 90.5, -1.5, [3.0], 900.5, None, True, 1.0],
+        ["c3", None, None, None, None, None, None, None, None,
+         None, None, None, None, None, None, None, None],
+    ],
+}
+
+
+def _payload_file(tmp_path, payload):
+    p = tmp_path / "snapshot.json"
+    p.write_text(json.dumps(payload))
+    return p
+
+
+def test_both_s2_paths_coerce_json_numbers_alike(registered, tmp_path):
+    p = _payload_file(tmp_path, COERCION_PAYLOAD)
+    direct = states_response_to_df(registered, json.loads(p.read_text()))
+    reader = registered.read.format("opensky").option("payload_path", str(p)).load()
+    assert direct.schema == STATES_SCHEMA
+    assert reader.schema == STATES_SCHEMA
+    rows = direct.orderBy("icao24").collect()
+    assert rows == reader.orderBy("icao24").collect()
+    a1, b2, c3 = (r.asDict() for r in rows)
+    assert (a1["longitude"], a1["velocity"], a1["vertical_rate"]) == (21.0, 0.0, 0.0)
+    assert isinstance(a1["velocity"], float)
+    assert (b2["last_contact"], b2["position_source"]) == (T0, 1)
+    assert isinstance(b2["last_contact"], int)
+    assert (a1["sensors"], b2["sensors"], c3["sensors"]) == ([1, 2], [3], None)
+
+
+def _with(column, value):
+    vector = list(COERCION_PAYLOAD["states"][0])
+    vector[STATES_SCHEMA.fieldNames().index(column)] = value
+    return {"time": T0, "states": [vector]}
+
+
+@pytest.mark.parametrize(
+    "payload",
+    [
+        _with("velocity", "abc"),
+        _with("last_contact", T0 + 0.5),
+        _with("velocity", True),
+        _with("sensors", [1.5]),
+        {"time": T0, "states": [COERCION_PAYLOAD["states"][0][:16]]},
+        {"time": T0},
+    ],
+    ids=["string", "fraction", "bool", "sensor-fraction", "arity", "no-states"],
+)
+def test_both_s2_paths_refuse_malformed_payloads(registered, tmp_path, payload):
+    p = _payload_file(tmp_path, payload)
+    with pytest.raises(InvalidResponseError):
+        states_response_to_df(registered, payload)
+    reader = registered.read.format("opensky").option("payload_path", str(p)).load()
+    # the reader runs in a Python worker, so its error arrives wrapped
+    # in a Spark exception that names it
+    with pytest.raises(Exception, match="InvalidResponseError"):
+        reader.collect()
 
 
 def test_stream_one_file_per_microbatch_into_session_kernel(

@@ -6,6 +6,8 @@ lifecycle (SURVEY.md §3) including the takeoff→cruise→landing session arc
 and the inactivity eviction.
 """
 
+import json
+
 from aircraftutilization_etl_spark.errors import InvalidResponseError
 from aircraftutilization_etl_spark.pipeline import FlightPipeline
 from aircraftutilization_etl_spark.sources.rest import states_response_to_df
@@ -88,6 +90,28 @@ def test_full_session_arc(pipeline, spark, tmp_path):
     # the landed aircraft left the state
     state = pipeline.state.read()
     assert state.filter("icao24 = 'ab1234'").count() == 0
+
+
+def test_json_integers_in_float_fields_complete_the_flight(pipeline, spark, tmp_path):
+    """JSON does not tell 0 from 0.0: a feed that sends integers in
+    double fields (and an integral float epoch) still runs the session
+    arc. The landing vector reports a stop as ``"velocity": 0,
+    "vertical_rate": 0``, exactly where real feeds send integers."""
+    arc = [(80, 9), (240, 0), (80, -5), (0, 0)]  # climb, cruise, descend, stop
+    for i, (velocity, vertical_rate) in enumerate(arc):
+        t = T0 + 300 * i
+        vector = [
+            "ab1234", "CALL", "Nowhere", float(t), t, 21, 48, 1000, False,
+            velocity, 90, vertical_rate, None, 900, "7700", False, 0,
+        ]
+        raw = json.dumps({"time": t, "states": [vector]})
+        pipeline.run_active_flights(json.loads(raw), now_epoch=t)
+        pipeline.run_complete_flights()
+
+    rows = spark.read.parquet(str(tmp_path / "facts")).collect()
+    assert [(r["icao24"], r["flight_duration_minutes"]) for r in rows] == [
+        ("ab1234", 15)  # ceil(900 / 60)
+    ]
 
 
 def test_empty_state_complete_flights_noop(pipeline):

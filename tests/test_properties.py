@@ -7,15 +7,21 @@ their own equivalence tests.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from aircraftutilization_etl_spark.errors import InvalidResponseError
 from aircraftutilization_etl_spark.operators.chunking import (
     MAX_CHUNK,
     MIN_CHUNK,
     chunk_spans,
 )
 from aircraftutilization_etl_spark.operators.sampling import split_thresholds
+from aircraftutilization_etl_spark.sources.rest import (
+    STATES_ARROW_SCHEMA,
+    states_table,
+)
 
 ascii_text = st.text(
     alphabet=st.characters(min_codepoint=32, max_codepoint=126), max_size=400
@@ -191,3 +197,89 @@ def test_sqrt_weight_matches_exact_integer_sqrt(n):
     assert abs(w - exact) <= 1
     if n * 10**12 < 2**52:
         assert w == exact
+
+
+# S2 payloads. A clean vector draws each field's own JSON kind (JSON
+# does not tell 1 from 1.0, so int fields also get integral floats and
+# double fields ints); a dirty one puts a foreign value — an int, float,
+# string or bool of any size — into one numeric field of a clean vector.
+_int32 = st.integers(-(2**31), 2**31 - 1)
+_foreign = st.integers() | st.floats() | st.text(max_size=4) | st.booleans()
+
+
+def _is_numeric(kind: pa.DataType) -> bool:
+    return pa.types.is_integer(kind) or pa.types.is_floating(kind)
+
+
+def _own_values(kind: pa.DataType):
+    if pa.types.is_string(kind):
+        own = st.text(max_size=6)
+    elif pa.types.is_boolean(kind):
+        own = st.booleans()
+    elif pa.types.is_list(kind):
+        own = st.lists(_int32 | _int32.map(float), max_size=3)
+    elif pa.types.is_integer(kind):
+        own = _int32 | _int32.map(float)
+    else:
+        own = st.floats() | st.integers(-(2**53), 2**53)
+    return st.none() | own
+
+
+_clean_vectors = st.tuples(*(_own_values(f.type) for f in STATES_ARROW_SCHEMA))
+_NUMERIC_AT = [i for i, f in enumerate(STATES_ARROW_SCHEMA) if _is_numeric(f.type)]
+
+
+def _dirty(vector, at, value):
+    vector = list(vector)
+    vector[at] = value
+    return vector
+
+
+_dirty_vectors = st.builds(
+    _dirty, _clean_vectors, st.sampled_from(_NUMERIC_AT), _foreign
+)
+_payloads = st.fixed_dictionaries(
+    {
+        "states": st.none()
+        | st.lists(_clean_vectors.map(list), max_size=4)
+        | st.lists(
+            _clean_vectors.map(list)
+            | _dirty_vectors
+            | st.lists(_int32, max_size=18),
+            max_size=4,
+        )
+    }
+)
+
+
+def _kept(got, sent, kind: pa.DataType) -> bool:
+    """``got`` is ``sent`` moved into ``kind``: a number only between int
+    and double, never truncated, and never from a bool or a string."""
+    if sent is None:
+        return got is None
+    if pa.types.is_list(kind):
+        return len(got) == len(sent) and all(
+            _kept(g, x, kind.value_type) for g, x in zip(got, sent)
+        )
+    if not _is_numeric(kind):
+        return got == sent
+    if type(sent) not in (int, float):
+        return False
+    if sent != sent:  # NaN
+        return got != got
+    return got == (float(sent) if pa.types.is_floating(kind) else sent)
+
+
+@given(_payloads)
+@settings(max_examples=300, deadline=None)
+def test_states_table_types_every_payload_or_refuses_it(payload):
+    try:
+        table = states_table(payload)
+    except InvalidResponseError:
+        return
+    assert table.schema == STATES_ARROW_SCHEMA
+    states = payload["states"] or []
+    assert table.num_rows == len(states)
+    for field, sent_column in zip(STATES_ARROW_SCHEMA, zip(*states)):
+        got_column = table.column(field.name).to_pylist()
+        assert all(map(_kept, got_column, sent_column, [field.type] * len(states)))
